@@ -53,7 +53,6 @@ class MinHashConfig:
 @dataclass(frozen=True)
 class PipelineConfig:
     similarity_threshold: int = DEFAULT_SIMILARITY_THRESHOLD
-    consolidation_threshold: float = DEFAULT_CONSOLIDATION_THRESHOLD
     w_content: float = WEIGHT_CONTENT_RATIO
     w_jaccard: float = WEIGHT_TOKEN_JACCARD
     w_path: float = WEIGHT_PATH_JW
@@ -100,5 +99,3 @@ class PipelineConfig:
     jw_dedup_broadcast_max_bytes: int = 64 * 1024 * 1024
     # clustering
     cc_max_iterations: int = 50
-    # checkpointing / resume
-    checkpoint_dir: str | None = None

@@ -126,12 +126,6 @@ def exploded_blocks(keyed: DataFrame) -> DataFrame:
     return keyed.select(F.explode("block_keys").alias("block_key"), "file_id")
 
 
-def block_census(blocks: DataFrame) -> DataFrame:
-    """Block-size census used for salting decisions and skew metrics
-    (SURVEY.md §4.2 'hot-key skew salting')."""
-    return blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
-
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_cols: list,

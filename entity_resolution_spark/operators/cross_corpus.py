@@ -25,7 +25,7 @@ Scale shape (delta-proportional, like plans/incremental.py):
 
 Reference bands larger than ``drop_limit`` are boilerplate stop-keys and
 are removed (their members are still reachable through their other, more
-selective bands — the same convention as `_capped_block_pairs`).
+selective bands — the same convention as `candidates.capped_block_pairs`).
 """
 
 from __future__ import annotations

@@ -41,8 +41,10 @@ caused heap-thrash anti-scaling at local[32].
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -100,11 +102,33 @@ def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(batch_jaro_winkler(a, b))
 
 
-@pandas_udf(T.IntegerType())
-def _lev_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    from ..functions.similarity import batch_fuzz_ratio
+class Phase1Bound(NamedTuple):
+    ub: Column  # edit-ratio length bound, over l_n / r_n
+    base_score: Column  # jaccard + JW blend terms, over token_jaccard / path_jw
+    bound: Column  # blend upper bound, over the ub / base_score columns
+    reject_below: float  # bound below this can never reach the threshold
 
-    return pd.Series(batch_fuzz_ratio(a, b))
+
+def phase1_bound(cfg: PipelineConfig) -> Phase1Bound:
+    """The phase-1 bound, built once for both scoring and re-thresholding
+    (which recomputes it from stored token_jaccard / path_jw to find the
+    pairs whose content term was never computed — the same expressions
+    give the same floats, so scoring's reject decisions are reproduced).
+
+    lev_ratio is banker's-rounded to an int, so the true blend can exceed
+    the unrounded length bound by up to w_content*0.5 — the reject line
+    widens the gate by that slack so "bound misses threshold" really means
+    "can never match"."""
+    return Phase1Bound(
+        ub=F.when(
+            (F.col("l_n") > 0) & (F.col("r_n") > 0),
+            200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
+        ).otherwise(F.lit(0.0)),
+        base_score=cfg.w_jaccard * 100.0 * F.col("token_jaccard")
+        + cfg.w_path * 100.0 * F.col("path_jw"),
+        bound=cfg.w_content * F.col("ub") + F.col("base_score"),
+        reject_below=cfg.similarity_threshold - cfg.w_content * 0.5,
+    )
 
 
 def score_pairs(
@@ -161,10 +185,7 @@ def score_pairs(
     union_sz = F.size("l_tokens") + F.size("r_tokens") - inter
     jac = F.when(union_sz > 0, inter.cast("double") / union_sz).otherwise(F.lit(0.0))
     jw = _jw_udf(F.col("l_base"), F.col("r_base"))
-    ub = F.when(
-        (F.col("l_n") > 0) & (F.col("r_n") > 0),
-        200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
-    ).otherwise(F.lit(0.0))
+    p1b = phase1_bound(cfg)
 
     # Phase 1 runs as TWO materialized passes, not one projection. In the
     # fused plan, ExtractPythonUDFs hoists the JW UDF into an
@@ -186,7 +207,7 @@ def score_pairs(
         "right_id",
         "block_key",
         jac.alias("token_jaccard"),
-        ub.alias("ub"),
+        p1b.ub.alias("ub"),
         F.coalesce("l_base", F.lit("")).alias("l_base"),
         F.coalesce("r_base", F.lit("")).alias("r_base"),
     ).persist()
@@ -225,20 +246,21 @@ def score_pairs(
     base_pairs = slim.select("l_base", "r_base").distinct()
     # this census aggregate is the fill job for slim's cache too: the
     # joins run once here, and every later read is a cache hit. It also
-    # measures the summed operand length so the broadcast decision is
+    # measures the summed operand bytes so the broadcast decision is
     # byte-aware: explicit F.broadcast bypasses autoBroadcastJoinThreshold,
     # so a row count alone cannot prevent an oversized broadcast when the
-    # distinct operands are long strings.
+    # distinct operands are long strings. UTF-8 bytes, not characters: a
+    # non-ASCII basename is up to 4 bytes per character.
     census = base_pairs.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(F.length("l_base") + F.length("r_base")), F.lit(0)
-        ).alias("chars"),
+            F.sum(F.octet_length("l_base") + F.octet_length("r_base")), F.lit(0)
+        ).alias("bytes"),
     ).collect()[0]
     n_distinct = census["n"]
-    # UTF-8 chars ~ bytes for path-like operands, plus ~48B/row of UnsafeRow
-    # + object overhead in the broadcast relation
-    est_bytes = int(census["chars"]) + 48 * n_distinct
+    # operand bytes plus ~48B/row of UnsafeRow + object overhead in the
+    # broadcast relation
+    est_bytes = int(census["bytes"]) + 48 * n_distinct
     if (
         n_distinct <= cfg.jw_dedup_broadcast_max
         and est_bytes <= cfg.jw_dedup_broadcast_max_bytes
@@ -254,29 +276,21 @@ def score_pairs(
         "token_jaccard",
         "path_jw",
         "ub",
-    ).withColumn(
-        "base_score",
-        cfg.w_jaccard * 100.0 * F.col("token_jaccard") + cfg.w_path * 100.0 * F.col("path_jw"),
-    ).persist()
+    ).withColumn("base_score", p1b.base_score).persist()
     ctx._phase1.append(p1)
     p1.count()
     ctx.p1_fill_seconds = round(_time.time() - _t0, 3)
     # p1 is filled — the slim intermediate (with its basename payload) can go
     slim.unpersist()
-    # lev_ratio is banker's-rounded to an int, so the true blend can exceed
-    # the unrounded length bound by up to w_content*0.5 — widen the gate by
-    # that slack so "bound misses threshold" really means "can never match"
-    bound = cfg.w_content * F.col("ub") + F.col("base_score")
-    reject_below = cfg.similarity_threshold - cfg.w_content * 0.5
 
     rejected = (
-        p1.filter(bound < reject_below)
+        p1.filter(p1b.bound < p1b.reject_below)
         .withColumn("lev_ratio", F.lit(0))
         .withColumn("score", F.round("base_score", 6))
         .select(*_OUT_COLS)
     )
 
-    survivors = p1.filter(bound >= reject_below)
+    survivors = p1.filter(p1b.bound >= p1b.reject_below)
     # megafile guard: truncate the content fed to the LCS kernel at
     # lev_max_chars (JVM-side, so the Arrow transfer shrinks too) and carry
     # the true lengths; see PipelineConfig.lev_max_chars for the cost math

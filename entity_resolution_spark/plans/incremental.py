@@ -23,9 +23,11 @@ Cost per increment is DELTA-PROPORTIONAL — the corpus is scanned
   are recomputed map-side — compute, not shuffle);
 - scoring features are semi-probed down to actual pair members before the
   scoring joins, so the corpus light-feature frame never shuffles;
-- connected components runs only over components touched by a new edge:
-  prior clusters replay their star edges iff an endpoint belongs to them;
-  every other row keeps its prior assignment verbatim.
+- connected components runs only over components touched by a new edge
+  (the affected-cluster repair shared with retraction and review,
+  plans/repair.py): prior clusters replay their star edges iff an
+  endpoint belongs to them; every other row keeps its prior assignment
+  verbatim.
 
 The broadcast frames (digests, block keys, pair ids, touched clusters) are
 all O(delta x keys); for a delta that is a large fraction of the corpus,
@@ -53,9 +55,10 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.blocking import exploded_blocks, with_block_keys, with_features
-from ..operators.clustering import connected_components
+from ..operators.candidates import block_census
 from ..operators.scoring import matched_edges, score_pairs
 from .pipeline import exact_duplicate_edges, sha_group_key
+from .repair import affected, reclose
 
 
 @dataclass
@@ -78,11 +81,7 @@ def incremental_dropped_keys(
     new_keys = new_blocks.select("block_key").distinct()
     live_old = old_blocks.join(F.broadcast(new_keys), "block_key", "left_semi")
     idx = live_old.unionByName(new_blocks)
-    return (
-        idx.groupBy("block_key")
-        .agg(F.count("*").alias("block_size"))
-        .filter(F.col("block_size") > cfg.block_key_drop_limit)
-    )
+    return block_census(idx).filter(F.col("block_size") > cfg.block_key_drop_limit)
 
 
 def incremental_candidate_pairs(
@@ -157,15 +156,11 @@ def resolve_incremental(
     cfg = cfg or PipelineConfig()
     spark = new_files.sparkSession
     from ..session import ensure_py_files
-    from ..sources.readers import validate_schema
+    from ..sources.readers import validate_schema, with_file_id
 
     ensure_py_files(spark)
     validate_schema(new_files)
-    if "file_id" not in new_files.columns:
-        id_cols = [c for c in ("repo", "path", "commit") if c in new_files.columns]
-        new_files = new_files.withColumn(
-            "file_id", F.xxhash64(*[F.col(c) for c in id_cols])
-        )
+    new_files = with_file_id(new_files)
 
     stage_secs: dict[str, float] = {}
     import time
@@ -197,21 +192,18 @@ def resolve_incremental(
     # semi-probed — the corpus is scanned (column-pruned to the narrow sha
     # projection), never shuffled or re-collapsed. Unaffected groups keep
     # their membership through the prior clusters. Edges here are the only
-    # exact edges whose components can change.
-    aff = feat_all.withColumn("__sha_key", sha_group_key()).join(
-        F.broadcast(new_feat.select(sha_group_key().alias("__sha_key")).distinct()),
-        "__sha_key",
+    # exact edges whose components can change. (An inner join on the
+    # distinct digest keys, not a left_semi: the optimizer pushes a semi
+    # join below the old ∪ new union, doubling its broadcast and exchanges.)
+    aff_reps, exact_edges = exact_duplicate_edges(
+        feat_all.withColumn("__sha_key", sha_group_key())
+        .join(
+            F.broadcast(new_feat.select(sha_group_key().alias("__sha_key")).distinct()),
+            "__sha_key",
+        )
+        .drop("__sha_key")
     )
-    rep_map = aff.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    aff = aff.join(rep_map.hint("shuffle_hash"), "__sha_key")
-    exact_edges = (
-        aff.filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
-    )
-    aff_reps = _ck(
-        "exact_collapse",
-        aff.filter(F.col("file_id") == F.col("rep_id")).drop("rep_id", "__sha_key"),
-    )
+    aff_reps = _ck("exact_collapse", aff_reps)
     # only new rows that became their group's representative need blocking
     # keys; a new row folded under an existing old rep rides its star edge
     new_reps = aff_reps.join(new_ids, "file_id", "left_semi")
@@ -277,36 +269,23 @@ def resolve_incremental(
     new_edges = near.unionByName(exact_edges).localCheckpoint(eager=True)
     stage_secs["edges"] = round(time.time() - t0, 3)
 
-    # Connected components over AFFECTED components only: prior clusters
-    # touched by any new edge replay their star edges; everything else
+    # Connected components over AFFECTED components only (the shared
+    # repair, plans/repair.py): prior clusters touched by any new edge
+    # replay their star edges (cluster_id -> member); everything else
     # keeps its prior assignment untouched. CC input is delta-bounded —
-    # O(new edges + members of touched clusters), not O(corpus).
+    # O(new edges + members of touched clusters), not O(corpus). New rows
+    # no edge reaches are singletons.
     t0 = time.time()
     touched = (
         new_edges.select(F.col("src").alias("file_id"))
         .unionByName(new_edges.select(F.col("dst").alias("file_id")))
         .distinct()
     )
-    aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    aff_clusters, unchanged, members = affected(prior_clusters, touched)
+    star_aff = members.filter(F.col("file_id") != F.col("cluster_id")).select(
+        F.col("cluster_id").alias("src"), F.col("file_id").alias("dst")
     )
-    star_aff = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .filter(F.col("file_id") != F.col("cluster_id"))
-        .select(F.col("cluster_id").alias("src"), F.col("file_id").alias("dst"))
-    )
-    components = connected_components(new_edges.unionByName(star_aff), cfg)
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    ).select("file_id", "cluster_id")
-    new_singletons = (
-        new_ids.join(components, "file_id", "left_anti")
-        .select("file_id", F.col("file_id").alias("cluster_id"))
-    )
-    clusters = unchanged.unionByName(components).unionByName(new_singletons)
+    clusters = reclose(unchanged, new_edges.unionByName(star_aff), new_ids, cfg)
     n_clusters = clusters.select("cluster_id").distinct().count()
     stage_secs["clustering"] = round(time.time() - t0, 3)
 

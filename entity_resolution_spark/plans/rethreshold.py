@@ -13,8 +13,8 @@ just to change one comparison; this plan reuses the scored lineage:
   phase-1 bound sat below the original reject line (so their content term
   was never computed) but reaches the new one. The bound is recomputed
   from the lineage's own stored ``token_jaccard``/``path_jw`` plus the
-  feature lengths with the SAME JVM expression trees scoring used, so the
-  original reject decision is reproduced float-for-float (a 1e-6 slack
+  feature lengths by scoring's own ``phase1_bound``, so the original
+  reject decision is reproduced float-for-float (a 1e-6 slack
   makes the suspect set a safe superset — re-scoring a pair that was
   actually scored exactly is idempotent: same kernel, same operands).
 
@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.clustering import assign_clusters, connected_components
-from ..operators.scoring import matched_edges, score_pairs
+from ..operators.scoring import matched_edges, phase1_bound, score_pairs
 from .pipeline import exact_duplicate_edges
 
 
@@ -77,21 +77,12 @@ def rethreshold_clusters(
         j = scored.join(lo.hint("shuffle_hash"), "left_id").join(
             ro.hint("shuffle_hash"), "right_id"
         )
-        # identical expression trees to scoring's phase 1, fed the stored
-        # jaccard/jw doubles -> identical bound floats
-        ub = F.when(
-            (F.col("l_n") > 0) & (F.col("r_n") > 0),
-            200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
-        ).otherwise(F.lit(0.0))
-        base = (
-            cfg.w_jaccard * 100.0 * F.col("token_jaccard")
-            + cfg.w_path * 100.0 * F.col("path_jw")
-        )
-        bound = cfg.w_content * ub + base
-        old_rb = cfg.similarity_threshold - cfg.w_content * 0.5
-        new_rb = float(new_threshold) - cfg.w_content * 0.5
+        p1 = phase1_bound(cfg)
+        new_rb = phase1_bound(new_cfg).reject_below
         suspects = (
-            j.filter((bound < old_rb + 1e-6) & (bound >= new_rb))
+            j.withColumn("ub", p1.ub)
+            .withColumn("base_score", p1.base_score)
+            .filter((p1.bound < p1.reject_below + 1e-6) & (p1.bound >= new_rb))
             .select("left_id", "right_id", "block_key")
             .localCheckpoint(eager=True)
         )

@@ -8,12 +8,11 @@ exists to avoid; this plan repairs only what a deletion can actually
 change:
 
 - clusters not containing a deleted row keep their assignment verbatim
-  (connected components are closed under removing rows outside them);
-- within affected clusters, the surviving evidence is REPLAYED, not
-  re-scored: matched pairs from the prior scored lineage whose endpoints
-  both survive, plus exact-duplicate star edges recomputed among the
-  survivors' sha groups — connected components over this delta-bounded
-  edge set re-closes the affected clusters (they can split into several);
+  and affected clusters re-close over their REPLAYED surviving evidence
+  — the shared affected-cluster repair (plans/repair.py): matched pairs
+  from the prior scored lineage whose endpoints both survive, plus
+  exact-duplicate star edges recomputed among the survivors' sha groups
+  (an affected cluster can split into several);
 - the one genuinely new piece of evidence a deletion creates: when a
   deleted row was its sha group's REPRESENTATIVE, the surviving minimum
   becomes the new representative and its pairwise evidence has never been
@@ -46,9 +45,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.clustering import connected_components
 from .incremental import IncrementalResult, resolve_incremental
 from .pipeline import sha_group_key
+from .repair import affected, member_evidence, reclose
 
 
 @dataclass
@@ -123,56 +122,21 @@ def retract_and_repair(
     # --- phase A: retract + re-close affected clusters ----------------
     t0 = time.time()
     touched = del_ids.unionByName(promoted)
-    aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    )
+    aff_clusters, unchanged, members = affected(prior_clusters, touched)
     # surviving, non-promoted members of the affected clusters — the rows
     # whose assignment must be recomputed from surviving evidence
     members = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .join(F.broadcast(touched), "file_id", "left_anti")
+        members.join(F.broadcast(touched), "file_id", "left_anti")
         .select("file_id")
         .localCheckpoint(eager=True)
     )
-    # replayed near evidence: prior matched pairs with both endpoints in
-    # the member set (never re-scored — pair scores are pair-local)
-    near = (
-        prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "left_id")),
-            "left_id",
-            "left_semi",
-        )
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "right_id")),
-            "right_id",
-            "left_semi",
-        )
-        .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
+    # surviving evidence among the members; the sha star edges take the
+    # min member as interim representative (the promoted-rep fold below
+    # re-collapses groups that gained their true new representative)
+    edges = member_evidence(prior_scored, feat_surv, members, cfg).localCheckpoint(
+        eager=True
     )
-    # exact star edges among the surviving members' sha groups (interim
-    # representative = min member; the promoted-rep fold below re-collapses
-    # groups that gained their true new representative)
-    mem_feat = feat_surv.join(F.broadcast(members), "file_id", "left_semi")
-    mem_sha = mem_feat.withColumn("__sha_key", sha_group_key())
-    mem_rep = mem_sha.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    exact = (
-        mem_sha.join(mem_rep.hint("shuffle_hash"), "__sha_key")
-        .filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
-    )
-    edges = near.unionByName(exact).localCheckpoint(eager=True)
-    components = connected_components(edges, cfg)
-    singles = members.join(components, "file_id", "left_anti").select(
-        "file_id", F.col("file_id").alias("cluster_id")
-    )
-    phase_a = unchanged.unionByName(components).unionByName(singles)
+    phase_a = reclose(unchanged, edges, members, cfg)
     stage_secs["retract_reclose"] = round(time.time() - t0, 3)
 
     blocks_surv = (
@@ -181,16 +145,16 @@ def retract_and_repair(
         else None
     )
 
-    if n_promoted == 0:
+    def _metrics() -> DataFrame:
         rows = [
             ("retraction", "deleted_rows", float(n_deleted)),
-            ("retraction", "promoted_reps", 0.0),
+            ("retraction", "promoted_reps", float(n_promoted)),
             ("retraction", "affected_prior_clusters", float(aff_clusters.count())),
         ] + [(k, "seconds", float(v)) for k, v in stage_secs.items()]
-        metrics = spark.createDataFrame(
-            rows, "stage string, metric string, value double"
-        )
-        return RetractionResult(feat_surv, phase_a, metrics, blocks_surv)
+        return spark.createDataFrame(rows, "stage string, metric string, value double")
+
+    if n_promoted == 0:
+        return RetractionResult(feat_surv, phase_a, _metrics(), blocks_surv)
 
     # --- phase B: fold promoted representatives back in ---------------
     # They are "new" to the scoring stage (non-representatives never
@@ -223,13 +187,5 @@ def retract_and_repair(
         prior_blocks=blocks_surv,
     )
     stage_secs["promotion_fold"] = round(time.time() - t0, 3)
-
-    rows = [
-        ("retraction", "deleted_rows", float(n_deleted)),
-        ("retraction", "promoted_reps", float(n_promoted)),
-        ("retraction", "affected_prior_clusters", float(aff_clusters.count())),
-    ] + [(k, "seconds", float(v)) for k, v in stage_secs.items()]
-    metrics = spark.createDataFrame(
-        rows, "stage string, metric string, value double"
-    ).unionByName(fold.metrics)
+    metrics = _metrics().unionByName(fold.metrics)
     return RetractionResult(fold.features, fold.clusters, metrics, fold.blocks)

@@ -3,8 +3,8 @@
 The other half of the active-learning loop: ``linkage.review_queue``
 surfaces the pairs nearest the decision boundary; a reviewer returns
 (left_id, right_id, decision) verdicts, and this plan folds them into the
-standing clusters without re-resolving the corpus — the same
-delta-proportional repair shape as ``retraction.retract_and_repair``:
+standing clusters without re-resolving the corpus — the affected-cluster
+repair shared with retraction and folds (plans/repair.py):
 
 - clusters containing no decision endpoint keep their assignment
   verbatim;
@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.clustering import connected_components
-from .pipeline import sha_group_key
+from .repair import affected, member_evidence, reclose
 
 
 @dataclass
@@ -55,7 +54,8 @@ def apply_review_decisions(
     {'match', 'non_match'} — the shape ``linkage.review_queue`` hands a
     reviewer, verdict column appended. Pair order is canonicalized; on
     conflicting verdicts for one pair, 'non_match' wins (the conservative
-    reading of a disagreement).
+    reading of a disagreement). A verdict naming a file_id that is not in
+    ``prior_clusters`` raises ``ValueError``.
     """
     cfg = cfg or PipelineConfig()
     spark = prior_features.sparkSession
@@ -95,60 +95,31 @@ def apply_review_decisions(
         .unionByName(dec.select(F.col("dst").alias("file_id")))
         .distinct()
     )
-    aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    aff_clusters, unchanged, members = affected(prior_clusters, touched)
+    members = members.select("file_id").localCheckpoint(eager=True)
+    # every touched id that is in prior_clusters is a member of its own
+    # affected cluster: a verdict naming any other id would add a phantom
+    # edge for a row the corpus does not hold. Probed over the checkpointed
+    # verdict frames (the same ids as `touched`, no re-shuffle of dec).
+    verdicts = must.unionByName(cannot)
+    ends = verdicts.select(F.col("src").alias("file_id")).unionByName(
+        verdicts.select(F.col("dst").alias("file_id"))
     )
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    )
-    members = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .select("file_id")
-        .localCheckpoint(eager=True)
-    )
+    if not ends.join(F.broadcast(members), "file_id", "left_anti").isEmpty():
+        raise ValueError("decision names a file_id not in prior_clusters")
 
-    # materialized evidence among the members: matched lineage pairs +
-    # sha star edges (members cover whole clusters, so the per-group
-    # minimum inside the member set equals the group's global minimum)
-    near = (
-        prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "left_id")),
-            "left_id",
-            "left_semi",
-        )
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "right_id")),
-            "right_id",
-            "left_semi",
-        )
-        .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    )
-    mem_sha = prior_features.join(
-        F.broadcast(members), "file_id", "left_semi"
-    ).withColumn("__sha_key", sha_group_key())
-    mem_rep = mem_sha.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    exact = (
-        mem_sha.join(mem_rep.hint("shuffle_hash"), "__sha_key")
-        .filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
-    )
+    # materialized evidence among the members (members cover whole
+    # clusters, so the per-group minimum inside the member set equals the
+    # group's global minimum)
+    evidence = member_evidence(prior_scored, prior_features, members, cfg)
     # overrides: remove the cannot edges (evidence edges are canonical
     # src<dst already), add the must edges
-    evidence = near.unionByName(exact)
     edges = (
         evidence.join(F.broadcast(cannot), ["src", "dst"], "left_anti")
         .unionByName(must)
         .localCheckpoint(eager=True)
     )
-    components = connected_components(edges, cfg)
-    singles = members.join(components, "file_id", "left_anti").select(
-        "file_id", F.col("file_id").alias("cluster_id")
-    )
-    clusters = unchanged.unionByName(components).unionByName(singles)
+    clusters = reclose(unchanged, edges, members, cfg)
 
     rows = [
         ("review", "match_overrides", float(n_must)),

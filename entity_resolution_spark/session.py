@@ -61,6 +61,26 @@ def ensure_py_files(spark: SparkSession) -> None:
     _PYFILES_SHIPPED.add(key)
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory`` sized from host RAM: 40% of it in
+    whole GiB, floor 1g, cap 16g.
+
+    In local mode the driver JVM is the whole cluster, and it shares the
+    host with the Python driver, one Python worker per core and its own
+    off-heap/metaspace overhead — a fixed 16g heap on a 16 GB host gets
+    the JVM OOM-killed mid-run. ``total_bytes`` defaults to the host's
+    physical memory; ``SPARK_GRAFT_DRIVER_MEM`` still overrides the result
+    in get_spark.
+    """
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return "16g"  # no sysconf (non-POSIX): the previous fixed default
+    gib = int(total_bytes * 0.4) // (1 << 30)
+    return f"{min(16, max(1, gib))}g"
+
+
 def get_spark(
     app_name: str = "entity_resolution_spark",
     cores: int | None = None,
@@ -96,7 +116,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # keep the broadcast threshold at Spark's default 10MB: corpus-sized
         # frames (blocks, features) must never be broadcast — observed 2x

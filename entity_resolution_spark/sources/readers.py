@@ -10,6 +10,7 @@ Iceberg, parquet, ORC, CSV or JSONL. This module provides:
   (the table-level form of the reference's column-membership guard,
   entity_resolution.py:187-189 / SURVEY.md §2.2 P4): missing/mistyped
   columns fail fast with a complete report, extra columns pass through;
+- ``with_file_id`` — the deterministic fallback id for inputs without one;
 - ``load_source`` — Iceberg catalog read with graceful parquet fallback
   (the sandbox has no Iceberg runtime jar; a cluster with one reads the
   same call as a real catalog table — SURVEY.md §7.3 item 6);
@@ -64,6 +65,20 @@ def validate_schema(df: DataFrame, expected: T.StructType = REPO_FILES_SCHEMA) -
             "input does not match repo_files schema: " + "; ".join(problems)
         )
     return df
+
+
+def with_file_id(files: DataFrame) -> DataFrame:
+    """Add the deterministic fallback ``file_id`` when the input has none.
+
+    monotonically_increasing_id() is partition-dependent, which made
+    cluster_id = min(file_id) nondeterministic across runs/parallelism. A
+    content-address over the identity columns is stable under any
+    partitioning (64-bit birthday collisions only matter past ~10^9
+    files; callers at that scale should assign their own ids)."""
+    if "file_id" in files.columns:
+        return files
+    id_cols = [c for c in ("repo", "path", "commit") if c in files.columns]
+    return files.withColumn("file_id", F.xxhash64(*[F.col(c) for c in id_cols]))
 
 
 def infer_format(path: str) -> str:

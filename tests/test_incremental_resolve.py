@@ -327,6 +327,11 @@ def test_review_empty_and_validation(spark):
     assert _cluster_sets(out.clusters) == _cluster_sets(prior.clusters)
     with pytest.raises(ValueError, match="decision"):
         _apply(prior, [(1, 2, "maybe")], spark, cfg)
+    # a verdict naming an id outside the prior resolution is rejected, not
+    # turned into a phantom edge
+    known = sorted(r["file_id"] for r in prior.clusters.collect())
+    with pytest.raises(ValueError, match="file_id"):
+        _apply(prior, [(known[0], known[-1] + 1, "match")], spark, cfg)
 
 
 def test_review_non_match_keeps_indirect_paths(spark):

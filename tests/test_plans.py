@@ -228,3 +228,46 @@ def test_interleaved_resolves_report_independent_scoring_state(spark):
             "stage = 'scoring_p1_fill' AND metric = 'seconds'"
         ).collect()
         assert row and row[0]["value"] == ctx.p1_fill_seconds
+
+
+def test_jw_broadcast_guard_counts_utf8_bytes(spark):
+    """The distinct-operand JW map is broadcast only when its estimated
+    size fits jw_dedup_broadcast_max_bytes, and the estimate counts UTF-8
+    bytes: with multibyte basenames and the cap set between the character
+    estimate and the byte estimate, scoring takes the inline path."""
+    import contextlib
+    import io
+
+    from entity_resolution_spark.config import PipelineConfig
+    from entity_resolution_spark.operators.blocking import with_features
+    from entity_resolution_spark.operators.scoring import score_pairs
+
+    body = "x = 1\n" * 20
+    rows = [
+        ("r", "src/данные.py", "c1", "py", body, 1),
+        ("r", "lib/данные.py", "c2", "py", body + "y = 2\n", 2),
+    ]
+    files = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string, file_id long"
+    )
+    feat = with_features(files)
+    pairs = spark.createDataFrame([(1, 2, "k")], "left_id long, right_id long, block_key string")
+    base = "данные.py"
+    # one distinct operand pair; estimate = operand size + 48 B/row
+    chars_est = 2 * len(base) + 48
+    bytes_est = 2 * len(base.encode("utf-8")) + 48
+    assert chars_est < bytes_est
+
+    def broadcasts_jw_map(max_bytes: int) -> bool:
+        out = score_pairs(pairs, feat, PipelineConfig(jw_dedup_broadcast_max_bytes=max_bytes))
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain()
+        out.scoring_ctx.release_phase1()
+        return any(
+            "BroadcastHashJoin" in line and "l_base" in line
+            for line in buf.getvalue().splitlines()
+        )
+
+    assert not broadcasts_jw_map((chars_est + bytes_est) // 2)
+    assert broadcasts_jw_map(bytes_est)
